@@ -1,6 +1,9 @@
 package graft.cluster
 
+import scala.collection.mutable
+import scala.reflect.ClassTag
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -12,10 +15,12 @@ import graft.Tables._
   * metric, in ClusterSpec; SURVEY §5).
   *
   * Dataflow per Lloyd iteration: centroids (k×d doubles — a summary)
-  * broadcast to a map-side nearest-centroid assignment; new centroids =
-  * per-(cluster, dim) means via posexplode + one shuffle. The only
-  * driver data is the k×d centroid matrix — the classic scalable
-  * K-Means shape.
+  * ride as one literal into a map-side nearest-centroid assignment;
+  * each partition folds its rows into per-cluster (n, Σv), and the
+  * driver merges those k×d partials in partition order — ONE single-
+  * stage job per iteration, no shuffle, no row blow-up. The only
+  * driver data is the k×d centroid matrix per partition — the classic
+  * scalable K-Means shape.
   */
 object KMeans {
 
@@ -26,8 +31,65 @@ object KMeans {
   private val vdExpr = "transform(embedding, x -> CAST(x AS DOUBLE))"
   private val vdSql = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
 
-  def points(s: SparkSession, d: String): DataFrame =
-    embeddings(s, d).select(col("vec_id"), expr(vdExpr).as("vd"))
+  /** (vec_id, vd) — plus any `extra` embeddings columns, unchanged. */
+  def points(s: SparkSession, d: String, extra: String*): DataFrame =
+    embeddings(s, d).select(
+      Seq(col("vec_id"), expr(vdExpr).as("vd")) ++ extra.map(col): _*)
+
+  /** Per-cluster N, Σv and Σv² — the mutable state one partition folds
+    * its rows into; partials merge on the driver via [[addAll]]. */
+  private[cluster] final class Moments(dim: Int) extends Serializable {
+    var n = 0L
+    val sum = new Array[Double](dim)
+    val sumsq = new Array[Double](dim)
+    def add(p: Array[Double]): Unit = {
+      n += 1
+      var i = 0
+      while (i < p.length) { sum(i) += p(i); sumsq(i) += p(i) * p(i); i += 1 }
+    }
+    def addAll(o: Moments): Unit = {
+      n += o.n
+      var i = 0
+      while (i < sum.length) {
+        sum(i) += o.sum(i); sumsq(i) += o.sumsq(i); i += 1
+      }
+    }
+  }
+
+  /** Folds every partition of `df` to one value and returns those in
+    * partition order: ONE single-stage job over a narrow plan — the
+    * shape of every per-round summary in this package (a Dataset
+    * aggregate would add a shuffle, and under AQE a second job). */
+  private[cluster] def foldPartitions[T: ClassTag](df: DataFrame)(
+      f: Iterator[InternalRow] => T): Array[T] =
+    df.queryExecution.toRdd.mapPartitions(rows => Iterator.single(f(rows)))
+      .collect()
+
+  /** Merges fold partials `from` into `into`, cluster by cluster. */
+  private[cluster] def addMoments(into: mutable.Map[Int, Moments],
+      from: collection.Map[Int, Moments]): Unit =
+    from.foreach { case (c, m) =>
+      into.get(c) match {
+        case Some(acc) => acc.addAll(m)
+        case None => into(c) = m
+      }
+    }
+
+  /** Per-cluster [[Moments]] of a (cid int, vd array<double>) frame in
+    * one [[foldPartitions]] job. Partials merge in partition order, so
+    * the sums are reproducible for a given partitioning. */
+  private[cluster] def clusterMoments(df: DataFrame): Map[Int, Moments] = {
+    val all = mutable.HashMap.empty[Int, Moments]
+    foldPartitions(df) { rows =>
+      val acc = mutable.HashMap.empty[Int, Moments]
+      rows.foreach { r =>
+        val v = r.getArray(1).toDoubleArray()
+        acc.getOrElseUpdate(r.getInt(0), new Moments(v.length)).add(v)
+      }
+      acc
+    }.foreach(addMoments(all, _))
+    all.toMap
+  }
 
   /** Argmin-over-centroids expression TEXT — references the centroid
     * matrix by index into a single `__cents` column (attached by
@@ -113,44 +175,40 @@ object KMeans {
   private def round6(v: Double): Double =
     math.floor(v * 1e6 + 0.5) / 1e6
 
-  /** Lloyd's algorithm over an arbitrary (vec_id, vd) points frame —
-    * init = the k rows with smallest vec_id, or caller-supplied seed
-    * centroids (`init`; BFR passes farthest-first seeds from a bounded
-    * sample). Dimension is read from the data. Returns (vec_id,
-    * cluster). */
-  def lloydOn(ptsIn: DataFrame, k: Int, iters: Int,
-      init: Option[Seq[(Int, Array[Double])]] = None): DataFrame = {
-    val pts = ptsIn.localCheckpoint()
+  /** Lloyd's algorithm over an arbitrary (vec_id, vd, …) points frame
+    * — init = the k rows with smallest vec_id (one job), or caller-
+    * supplied seed centroids (`init`; BFR passes farthest-first seeds
+    * from a bounded sample). Dimension is read from the data. Returns
+    * the final (cid, centroid) pairs, cid-sorted. Each iteration is one
+    * [[clusterMoments]] job over the assignment; `pts` is read once per
+    * iteration, so callers pass a materialized or cheap-to-scan frame.
+    */
+  def lloydCentroids(pts: DataFrame, k: Int, iters: Int,
+      init: Option[Seq[(Int, Array[Double])]] = None)
+  : Seq[(Int, Array[Double])] = {
     var cents: Seq[(Int, Array[Double])] = init.getOrElse {
-      pts.orderBy(col("vec_id")).limit(k).collect()
+      pts.select(col("vec_id"), col("vd")).orderBy(col("vec_id")).limit(k)
+        .collect()
         .map(r => (r.getLong(0).toInt, r.getSeq[Double](1).toArray))
         .sortBy(_._1).toSeq
     }
-    val dim = cents.head._2.length
     for (_ <- 1 to iters) {
-      val assigned = withAssign(pts, cents, "a")
-        .select(col("vec_id"), col("a.cid").as("cid"), col("vd"))
-      // new centroids: per-(cluster, dim) means — one shuffle of
-      // (cid, dim, component) triples, k×d result to the driver.
-      val next = assigned
-        .select(col("cid"), posexplode(col("vd")).as(Seq("dim", "v")))
-        .groupBy(col("cid"), col("dim"))
-        .agg(avg(col("v")).as("m"))
-        .collect()
-        .groupBy(_.getAs[Int]("cid"))
-        .map { case (cid, rows) =>
-          val arr = new Array[Double](dim)
-          rows.foreach(r =>
-            arr(r.getAs[Int]("dim")) = round6(r.getAs[Double]("m")))
-          (cid, arr)
-        }.toSeq.sortBy(_._1)
+      val next = clusterMoments(
+        withAssign(pts, cents, "a").select(col("a.cid"), col("vd")))
       // empty clusters keep their previous centroid
-      val byId = next.toMap
-      cents = cents.map { case (cid, old) => (cid, byId.getOrElse(cid, old)) }
+      cents = cents.map { case (cid, old) =>
+        (cid, next.get(cid).fold(old)(m => m.sum.map(v => round6(v / m.n))))
+      }
     }
-    withAssign(pts, cents, "a")
-      .select(col("vec_id"), col("a.cid").as("cluster"))
+    cents
   }
+
+  /** [[lloydCentroids]], then the final assignment as a lazy (vec_id,
+    * cluster) frame. */
+  def lloydOn(pts: DataFrame, k: Int, iters: Int,
+      init: Option[Seq[(Int, Array[Double])]] = None): DataFrame =
+    withAssign(pts, lloydCentroids(pts, k, iters, init), "a")
+      .select(col("vec_id"), col("a.cid").as("cluster"))
 
   /** Run Lloyd's algorithm on `embeddings`. */
   def lloyd(s: SparkSession, d: String, k: Int = K,

@@ -288,22 +288,35 @@ object Graphs {
   /** q36: connected components by synchronous min-label propagation to
     * convergence (driver checks the change count — a scalar, not data).
     * Output: component label (min member id) and size. */
-  def components(s: SparkSession, d: String): DataFrame = {
+  def components(s: SparkSession, d: String): DataFrame =
+    componentsOn(edges(s, d, Some(SubNations), SubThreshold))
+
+  /** Round cap of [[componentsOn]]: label propagation needs one round
+    * per hop of the graph's diameter (plus one to see no change). */
+  val CcMaxRounds = 50
+
+  /** [[components]] over any (src, dst) edge frame. Fails loudly when
+    * the labels have not converged after [[CcMaxRounds]] rounds — a
+    * longer-diameter graph would otherwise come back split into
+    * partial components. */
+  def componentsOn(edgeList: DataFrame): DataFrame = {
     // labels is referenced twice per round (min-propagation + change
     // count) — localCheckpoint keeps the plan constant-size; without it
     // the logical tree doubles per iteration (exponential analysis).
-    val ue = undirected(edges(s, d, Some(SubNations), SubThreshold))
-      .localCheckpoint()
+    val ue = undirected(edgeList).localCheckpoint()
     var labels = ue.select(col("src").as("node")).distinct()
       .withColumn("lbl", col("node")).localCheckpoint()
     var changed = 1L
     var iter = 0
-    while (changed > 0 && iter < 50) {
+    while (changed > 0 && iter < CcMaxRounds) {
       val next = ccRound(ue, labels).localCheckpoint()
       changed = next.filter(col("chg")).count()
       labels = next.select(col("node"), col("lbl"))
       iter += 1
     }
+    require(changed == 0,
+      s"components: labels still changing after $iter rounds " +
+        "(graph diameter above the round cap)")
     labels.groupBy(col("lbl").as("component"))
       .agg(count(lit(1)).as("csize"))
       .orderBy(col("component"))

@@ -384,8 +384,7 @@ object VectorSimilarity {
       .select(col("vec_id"), col("vd"), col("cluster").as("list_id"))
       .localCheckpoint()
     // centroids table for probe selection — per-(list, component)
-    // means, the same bounded-state shape as KMeans.lloydOn: a
-    // collect_list(vd) per list would buffer a whole IVF list
+    // means: a collect_list(vd) per list would buffer a whole IVF list
     // (corpus/nlist vectors) in ONE aggregation buffer; here no
     // buffer exceeds d elements
     val cents = lists

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.GraftSparkInternals
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cluster.{Bfr, KMeans}
 
@@ -27,12 +30,10 @@ class ClusterSpec extends AnyFunSuite {
     assert(TestUtil.nmi(pred, truth) > 0.999)
   }
 
-  test("bfr recovers well-separated 64-d clusters (NMI > 0.8)") {
-    // BFR reads through KMeans.points/embeddings, so exercise its
-    // kernel pieces directly: stats merge + mahalanobis behavior.
+  test("bfr CStats arithmetic: merge, centroid, sigma quirk, mahalanobis") {
     val p1 = Array.fill(64)(1.0)
     val p2 = Array.fill(64)(3.0)
-    val st = Bfr.StatsAgg.zero.add(p1).add(p2)
+    val st = Bfr.CStats.empty.add(p1).add(p2)
     assert(st.n == 2)
     assert(st.centroid.forall(_ == 2.0))
     // variance = (1+9)/2 - 4 = 1 → σ = 1 per dim
@@ -40,8 +41,71 @@ class ClusterSpec extends AnyFunSuite {
     // distance of p1 from centroid: z = 1 per dim → sqrt(64) = 8
     assert(math.abs(st.mahalanobis(p1) - 8.0) < 1e-9)
     // σ = 0 → divide-by-1 quirk (reference bfr.py:144-147)
-    val degenerate = Bfr.StatsAgg.zero.add(p1).add(p1)
+    val degenerate = Bfr.CStats.empty.add(p1).add(p1)
     assert(degenerate.sigma.forall(_ == 1.0))
+  }
+
+  test("bfr precomputed (frozen) mahalanobis is bit-identical to CStats'") {
+    def pt(seed: Long) = Array.tabulate(64)(j =>
+      (TestUtil.det01(seed * 64 + j) - 0.5) * 10.0)
+    // includes a degenerate (σ = 0 → 1) summary
+    val sums = Seq(
+      (0 until 7).foldLeft(Bfr.CStats.empty)((b, i) => b.add(pt(i))),
+      (0 until 2).foldLeft(Bfr.CStats.empty)((b, _) => b.add(pt(99))))
+    for (st <- sums; i <- 100 until 300) {
+      val p = pt(i)
+      assert(st.frozen.mahalanobis(p) == st.mahalanobis(p), s"point $i")
+    }
+  }
+
+  test("bfr recovers well-separated 64-d clusters (NMI > 0.8)") {
+    import spark.implicits._
+    val data = blobs(600, Bfr.K, Bfr.Dim)
+    val pts = data.map { case (id, v, _) => (id, v) }.toDF("vec_id", "vd")
+      .localCheckpoint()
+    val out = Bfr.runOn(pts).select("vec_id", "cluster").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(out.size == data.size, "every point labeled")
+    val pred = data.map { case (id, _, _) => out(id) }
+    val score = TestUtil.nmi(pred, data.map(_._3))
+    assert(score > 0.8, s"NMI $score")
+  }
+
+  test("bfr CS path: late far blobs become CS clusters; final labels " +
+      "agree with the last round's DS/CS/RS stats") {
+    import spark.implicits._
+    // chunk 0 (ids < 200) holds only the 10 DS blobs; from chunk 1 on,
+    // every 5th point comes from one of 3 new far blobs that no DS
+    // summary absorbs, so they pass through RS into CS (and CS merges)
+    val n = 1000
+    val data = (0 until n).map { i =>
+      val c = if (i >= 200 && i % 5 == 0) Bfr.K + (i / 5) % 3 else i % Bfr.K
+      val v = Array.tabulate(Bfr.Dim)(j =>
+        c * 100.0 + (TestUtil.det01(i.toLong * Bfr.Dim + j) - 0.5) * 2.0)
+      (i.toLong, v, c)
+    }
+    val pts = data.map { case (id, v, _) => (id, v) }.toDF("vec_id", "vd")
+      .localCheckpoint()
+    val statsDir =
+      java.nio.file.Files.createTempDirectory("bfr-cs-rounds").toString
+    val out = Bfr.runOn(pts, Some(statsDir)).select("vec_id", "cluster")
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(out.size == n, "every point labeled")
+    val last = spark.read.option("header", true).csv(statsDir).collect()
+      .map(_.toSeq.map(_.toString.toLong)).maxBy(_.head)
+    val labels = out.values.toSeq
+    val csIds = labels.filter(_ >= Bfr.CsIdOffset).distinct
+    assert(last(3) > 0, s"no CS cluster formed: $last")
+    assert(labels.count(c => c >= 0 && c < Bfr.CsIdOffset) == last(2),
+      "DS-labeled points == nof_point_discard")
+    assert(csIds.size == last(3),
+      "distinct CS labels == nof_cluster_compression")
+    assert(labels.count(_ >= Bfr.CsIdOffset) == last(4),
+      "CS-labeled points == nof_point_compression")
+    assert(labels.count(_ == -1) == last(5), "outliers == nof_point_retained")
+    val pred = data.map { case (id, _, _) => out(id) }
+    val score = TestUtil.nmi(pred, data.map(_._3))
+    assert(score > 0.95, s"NMI $score")
   }
 
   test("bfr end-to-end on embeddings: full coverage, DS ids 0..9, round stats") {
@@ -102,5 +166,52 @@ class ClusterSpec extends AnyFunSuite {
     }
     val w1 = wcss(1); val w5 = wcss(5)
     assert(w5 <= w1 * 1.0001, s"WCSS got worse: 1 iter $w1 → 5 iters $w5")
+  }
+
+  /** Runs `body` under a fresh job tag and counts the Spark jobs that
+    * carry it. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"cluster-spec-${System.nanoTime()}"
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      val out = body
+      GraftSparkInternals.waitUntilListenerBusEmpty(sc)
+      (out, n.get)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private val d01 = new java.io.File(sfDir).getParent + "/sf0.01"
+
+  test("q41 rows at sf0.01 are pinned (cluster, csize, r2, r2_kmeans, nmi)") {
+    val got = Bfr.bfrClusters(spark, d01).collect().map(r =>
+      (r.getInt(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
+        r.getDouble(4))).toSeq
+    val sizes = Seq(0 -> 19L, 1 -> 6L, 2 -> 293L, 3 -> 122L, 4 -> 15L,
+      5 -> 18L, 6 -> 6L, 7 -> 8L, 8 -> 8L, 9 -> 5L)
+    assert(got == sizes.map { case (c, n) => (c, n, 0.0341, 0.0821, 0.0619) })
+  }
+
+  test("job budget: q41 build + collect ≤ 20 jobs; lloydOn ≤ iters + 2") {
+    val (rows, q41Jobs) =
+      jobsIn(Bfr.bfrClusters(spark, d01).collect())
+    assert(rows.nonEmpty)
+    assert(q41Jobs <= 20, s"q41 ran $q41Jobs jobs")
+    val iters = 4
+    val pts = KMeans.points(spark, d01).localCheckpoint()
+    val (asg, lloydJobs) = jobsIn(KMeans.lloydOn(pts, 5, iters).collect())
+    assert(asg.length == pts.count())
+    assert(lloydJobs <= iters + 2, s"lloydOn ran $lloydJobs jobs")
   }
 }

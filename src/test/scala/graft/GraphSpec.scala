@@ -73,6 +73,22 @@ class GraphSpec extends AnyFunSuite {
       "path collapses to component 0")
   }
 
+  test("label-propagation components: a short path converges, a path " +
+      "past the round cap fails loudly") {
+    import spark.implicits._
+    def path(hops: Long) =
+      (0L until hops).map(i => (i, i + 1)).toDF("src", "dst")
+    val got = graft.graph.Graphs.componentsOn(path(10L)).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == Seq((0L, 11L)), "one component labeled by its min node")
+    // label 0 moves one hop per round: a path longer than the cap would
+    // come back as partial components if the loop stopped silently
+    val hops = graft.graph.Graphs.CcMaxRounds + 10L
+    val e = intercept[IllegalArgumentException](
+      graft.graph.Graphs.componentsOn(path(hops)))
+    assert(e.getMessage.contains("still changing"), e.getMessage)
+  }
+
   test("pagerank: mass conserved, star center dominates, symmetry holds") {
     import spark.implicits._
     // star K1,3: center 0, leaves 1..3, both directions
